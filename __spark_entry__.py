@@ -1786,11 +1786,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return path
 
     def events_rollup_served_q(spark, sf):
-        from distributed_vector_database_spark.streaming.rollup import (
-            read_latest_rollup,
-        )
+        from distributed_vector_database_spark.streaming.fold import read_latest
 
-        r = read_latest_rollup(spark, _rollup_table(spark, sf))
+        r = read_latest(spark, _rollup_table(spark, sf))
         return r.select(
             "window_start",
             "event_type",
@@ -3539,11 +3537,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from distributed_vector_database_spark.operators.evaluation import (
             score_hourly_volumes,
         )
-        from distributed_vector_database_spark.streaming.rollup import (
-            read_latest_rollup,
-        )
+        from distributed_vector_database_spark.streaming.fold import read_latest
 
-        r = read_latest_rollup(spark, _rollup_table(spark, sf))
+        r = read_latest(spark, _rollup_table(spark, sf))
         hourly = r.select(
             F.col("window_start").alias("bucket"),
             F.col("event_type").alias("etype"),

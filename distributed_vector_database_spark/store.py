@@ -52,7 +52,7 @@ from distributed_vector_database_spark.operators.changelog import (
     apply_changelog,
 )
 from distributed_vector_database_spark.operators.knn import knn_exact
-from distributed_vector_database_spark.streaming.compaction import latest_version
+from distributed_vector_database_spark.streaming.fold import latest_version
 
 STATE_COLS = ["key", "vector", "metadata", "ts"]
 LOG_SCHEMA = (

@@ -8,9 +8,11 @@ src/utils/wal_manager.py:185-246).
 
 Spark flow: readStream over the change-log directory (the WAL), and
 foreachBatch applies each micro-batch onto the compacted snapshot via
-the SAME `apply_changelog` used in batch — exactly-once via the
-streaming checkpointLocation (the WAL-position file, wal_pos.txt at
-src/datanode/handler.py:170, for free).
+the SAME `apply_changelog` used in batch, through the shared versioned
+fold (streaming/fold.py) — the streaming checkpointLocation is the
+WAL-position file (wal_pos.txt, src/datanode/handler.py:170), and the
+fold's marker keeps readers off a half-written snapshot. Read the
+snapshot with fold.read_latest.
 
 Scale: the snapshot rewrite per micro-batch is the simple-and-correct
 form; at 100 TB you swap the sink for a merge-on-read table format —
@@ -19,40 +21,35 @@ the change-log semantics (this module) stay identical.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from distributed_vector_database_spark.operators.changelog import apply_changelog
+from distributed_vector_database_spark.streaming.fold import build_fold, run_stream
 
 CHANGELOG_SCHEMA = "op string, key string, value double, ts long, seq long"
 
 
-def latest_version(path: str) -> int:
-    """Newest snapshot version under a versioned snapshot dir (-1 if
-    none) — the analog of picking the newest checkpoint_<ts> dir
-    (src/datanode/handler.py:185-190)."""
-    import os
+def build_compaction_fold(snapshot_dir: str):
+    """foreachBatch body applying one change-log micro-batch onto the
+    newest snapshot as version v+1 (the reference's checkpoint_<ts>
+    dirs, src/datanode/handler.py:156-179). Fully distributed —
+    nothing is collected to the driver."""
 
-    try:
-        versions = [int(d.split("=")[1]) for d in os.listdir(path) if d.startswith("v=")]
-        return max(versions) if versions else -1
-    except FileNotFoundError:
-        return -1
+    def step(batch, base, batch_id):
+        if base is None:
+            state = batch.sparkSession.createDataFrame(
+                [], "key string, value double, ts long, seq long"
+            )
+        else:
+            state = base()
+        return {
+            "": apply_changelog(
+                state, batch, key_col="key", ts_col="ts", op_col="op",
+                seq_col="seq",
+            )
+        }
 
-
-def read_latest_snapshot(spark: SparkSession, snapshot_dir: str) -> DataFrame:
-    """Load the newest compacted snapshot."""
-    v = latest_version(snapshot_dir)
-    if v < 0:
-        raise FileNotFoundError(f"no snapshot versions under {snapshot_dir}")
-    return spark.read.parquet(f"{snapshot_dir}/v={v}")
-
-
-def read_changelog_stream(
-    spark: SparkSession, log_dir: str, schema: str = CHANGELOG_SCHEMA
-) -> DataFrame:
-    """The WAL as a streaming source: JSON-lines files, one op per line
-    (src/utils/wal_manager.py:90-98)."""
-    return spark.readStream.schema(schema).json(log_dir)
+    return build_fold(snapshot_dir, step)
 
 
 def run_compaction_stream(
@@ -64,29 +61,5 @@ def run_compaction_stream(
 ):
     """Continuously fold the change-log into a compacted parquet
     snapshot. Returns the StreamingQuery (caller awaits/stops)."""
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        # versioned snapshots (the reference's checkpoint_<ts> dirs,
-        # src/datanode/handler.py:156-179): write v=N+1 from v=N + batch,
-        # never read and overwrite the same files. Fully distributed —
-        # nothing is collected to the driver.
-        spark_ = batch.sparkSession
-        v = latest_version(snapshot_dir)
-        if v >= 0:
-            base = spark_.read.parquet(f"{snapshot_dir}/v={v}")
-        else:
-            base = spark_.createDataFrame(
-                [], "key string, value double, ts long, seq long"
-            )
-        new_state = apply_changelog(
-            base, batch, key_col="key", ts_col="ts", op_col="op", seq_col="seq"
-        )
-        new_state.write.mode("overwrite").parquet(f"{snapshot_dir}/v={v + 1}")
-
-    stream = read_changelog_stream(spark, log_dir, schema)
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    fold = build_compaction_fold(snapshot_dir)
+    return run_stream(spark, log_dir, schema, fold, checkpoint_dir)

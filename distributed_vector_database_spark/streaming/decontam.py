@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_vector_database_spark.operators.decontam import decontaminate
+from distributed_vector_database_spark.streaming.fold import start_stream
 
 DOCS_SCHEMA = "doc_id long, text string"
 
@@ -78,12 +79,7 @@ def decontaminate_stream(
         )
         clean.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
 
-    return (
-        stream_docs.writeStream.foreachBatch(_one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_stream(stream_docs, _one_batch, checkpoint_dir)
 
 
 def read_clean_documents(spark: SparkSession, out_dir: str) -> DataFrame:

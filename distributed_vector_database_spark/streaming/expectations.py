@@ -11,9 +11,9 @@ Additivity decides the state per expectation kind:
   shape, |keys|-sized, merged additively per key — and derives
   violations = Σ(count-1) at read time.
 
-Same replay-safe write-audit-publish versioned fold as the other
-maintained states (streaming/lexical_stats.py): the batch_id marker
-makes at-least-once foreachBatch delivery exactly-once. Folding N
+Replay safety: the shared versioned fold (streaming/fold.py); the
+key-count table is a sidecar written before `counts`, which carries
+the marker. Folding N
 batches then reading the snapshot is hash-equal to the one-shot
 data_quality_report over the union — pinned by the `dq_served`
 contract query and tests/test_expectations_stream.py.
@@ -24,10 +24,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from distributed_vector_database_spark.streaming.compaction import latest_version
-from distributed_vector_database_spark.streaming.lexical_stats import (
-    _applied_batch,
-    _write_marker,
+from distributed_vector_database_spark.streaming.fold import (
+    build_fold,
+    latest_complete_version,
 )
 
 
@@ -89,40 +88,30 @@ def build_dq_fold(
     {state_dir}/keys/v=N (per-key row counts). fk =
     (child_col, parent_df, parent_col, rule_name)."""
 
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark_ = batch.sparkSession
-        cdir, kdir = f"{state_dir}/counts", f"{state_dir}/keys"
-        v = latest_version(cdir)
-        if v >= 0:
-            applied = _applied_batch(cdir, v)
-            if applied == batch_id:
-                return
-            if applied is None:
-                v -= 1
-        counts = _batch_rule_counts(batch, rules, fk)
-        if v >= 0:
-            counts = (
-                counts.unionByName(spark_.read.parquet(f"{cdir}/v={v}"))
-                .groupBy("rule")
-                .agg(F.sum("violations").alias("violations"))
-            )
+    def step(batch, base, batch_id):
+        tables = {}
         if unique_cols:
             keys = batch.groupBy(*unique_cols).agg(
                 F.count(F.lit(1)).alias("kn")
             )
-            if v >= 0:
+            if base is not None:
                 keys = (
-                    keys.unionByName(spark_.read.parquet(f"{kdir}/v={v}"))
+                    keys.unionByName(base("keys"))
                     .groupBy(*unique_cols)
                     .agg(F.sum("kn").alias("kn"))
                 )
-            keys.write.mode("overwrite").parquet(f"{kdir}/v={v + 1}")
-        counts.write.mode("overwrite").parquet(f"{cdir}/v={v + 1}")
-        _write_marker(cdir, v + 1, batch_id)
+            tables["keys"] = keys
+        counts = _batch_rule_counts(batch, rules, fk)
+        if base is not None:
+            counts = (
+                counts.unionByName(base("counts"))
+                .groupBy("rule")
+                .agg(F.sum("violations").alias("violations"))
+            )
+        tables["counts"] = counts
+        return tables
 
-    return fold
+    return build_fold(state_dir, step, marker_table="counts")
 
 
 def read_dq_report(
@@ -134,9 +123,7 @@ def read_dq_report(
     """Serve (rule, violations, passed) from the newest fully-published
     snapshot; uniqueness derived from the key-count state at read time."""
     cdir, kdir = f"{state_dir}/counts", f"{state_dir}/keys"
-    v = latest_version(cdir)
-    if v >= 0 and _applied_batch(cdir, v) is None:
-        v -= 1
+    v = latest_complete_version(cdir)
     if v < 0:
         raise FileNotFoundError(f"no dq state under {state_dir}")
     out = spark.read.parquet(f"{cdir}/v={v}")

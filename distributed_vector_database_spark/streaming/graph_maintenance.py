@@ -60,6 +60,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_vector_database_spark.streaming.fold import run_stream
+
 
 def _manifest_dir(state_dir: str) -> str:
     return os.path.join(state_dir, "manifest")
@@ -346,13 +348,6 @@ def run_graph_stream(
         max_basket,
         run_id=os.path.abspath(checkpoint_dir),
     )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.json(baskets_dir)
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_stream(
+        spark, baskets_dir, schema, fold, checkpoint_dir, max_files_per_trigger
     )

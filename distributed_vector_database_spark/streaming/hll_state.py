@@ -4,12 +4,10 @@ streaming leg of operators/sketch.py.
 The register table IS the state: m rows of (bucket, register), and the
 sketch union is register-wise MAX (operators/sketch.hll_merge). MAX is
 associative, commutative, and IDEMPOTENT — unlike the additive folds
-(streaming/lexical_stats.py term counts, streaming/expectations.py
-violation counts), replaying a micro-batch cannot corrupt this state.
-The versioned write-audit-publish shape and the `_applied_batch_id`
-marker are kept anyway: the marker skips wasted re-merges on replay,
-the versioning keeps readers off half-written snapshots, and the whole
-family stays one discipline (same crash-recovery tests apply).
+(term counts, violation counts), replaying a micro-batch cannot
+corrupt this state. It still goes through the shared versioned fold
+(streaming/fold.py): the replay skip saves wasted re-merges, and the
+versioning keeps readers off half-written snapshots.
 
 At 100 TB this is the distinct-count story: per-batch register tables
 are m-bounded regardless of batch size, the fold is O(m) per batch,
@@ -27,10 +25,10 @@ from distributed_vector_database_spark.operators.sketch import (
     hll_merge,
     hll_registers,
 )
-from distributed_vector_database_spark.streaming.compaction import latest_version
-from distributed_vector_database_spark.streaming.lexical_stats import (
-    _applied_batch,
-    _write_marker,
+from distributed_vector_database_spark.streaming.fold import (
+    build_fold,
+    read_latest,
+    run_stream,
 )
 
 EVENTS_SCHEMA = "event_id long, ts timestamp, user_id long, event_type string"
@@ -40,40 +38,17 @@ def build_hll_fold(state_dir: str, key_col: str, p: int = 6):
     """foreachBatch body maintaining {state_dir}/v=N register
     snapshots. Exposed so tests can drive crash/replay sequences."""
 
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark_ = batch.sparkSession
-        v = latest_version(state_dir)
-        if v >= 0:
-            applied = _applied_batch(state_dir, v)
-            if applied == batch_id:
-                # replay after a crash between marker and checkpoint
-                # commit: merging again would be CORRECT (max is
-                # idempotent) but wasted — skip like the family does
-                return
-            if applied is None:
-                # interrupted write: base on the last complete version
-                v -= 1
+    def step(batch, base, batch_id):
         fresh = hll_registers(batch, key_col, p)
-        if v >= 0:
-            base = spark_.read.parquet(f"{state_dir}/v={v}")
-            fresh = hll_merge(base, fresh)
-        fresh.write.mode("overwrite").parquet(f"{state_dir}/v={v + 1}")
-        _write_marker(state_dir, v + 1, batch_id)
+        return {"": fresh if base is None else hll_merge(base(), fresh)}
 
-    return fold
+    return build_fold(state_dir, step)
 
 
 def read_latest_registers(spark: SparkSession, state_dir: str) -> DataFrame:
     """Newest COMPLETE maintained register snapshot, (bucket, register)
     sorted by bucket."""
-    v = latest_version(state_dir)
-    if v >= 0 and _applied_batch(state_dir, v) is None:
-        v -= 1
-    if v < 0:
-        raise FileNotFoundError(f"no register versions under {state_dir}")
-    return spark.read.parquet(f"{state_dir}/v={v}").orderBy("bucket")
+    return read_latest(spark, state_dir).orderBy("bucket")
 
 
 def run_hll_stream(
@@ -89,15 +64,6 @@ def run_hll_stream(
     """Continuously fold arriving events' keys into the maintained
     register snapshot. Returns the StreamingQuery."""
     fold = build_hll_fold(state_dir, key_col, p)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
-    stream = reader.json(events_dir)
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_stream(
+        spark, events_dir, schema, fold, checkpoint_dir, max_files_per_trigger
     )

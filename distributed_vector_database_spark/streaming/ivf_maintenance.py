@@ -29,6 +29,7 @@ from distributed_vector_database_spark.operators.ann import (
     ivf_append,
     ivf_delete,
 )
+from distributed_vector_database_spark.streaming.fold import run_stream
 
 CHANGELOG_SCHEMA = "seq long, op string, vec_id long, embedding array<double>"
 
@@ -145,13 +146,6 @@ def run_ivf_changelog_stream(
     fold = build_ivf_changelog_fold(
         index_dir, centroids, key_col=key_col, vec_col=vec_col
     )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.json(changelog_dir)
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_stream(
+        spark, changelog_dir, schema, fold, checkpoint_dir, max_files_per_trigger
     )

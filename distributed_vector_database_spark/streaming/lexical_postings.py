@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from distributed_vector_database_spark.operators.lexical import postings_append
+from distributed_vector_database_spark.streaming.fold import run_stream
 
 DOCS_SCHEMA = "doc_id long, text string"
 
@@ -48,13 +49,6 @@ def run_postings_stream(
             batch_id=batch_id,
         )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.json(docs_dir)
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_stream(
+        spark, docs_dir, schema, fold, checkpoint_dir, max_files_per_trigger
     )

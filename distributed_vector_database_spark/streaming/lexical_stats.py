@@ -4,13 +4,11 @@ The batch half lives in operators/lexical.py: term_stats is additive and
 merge_term_stats folds a batch into the stored table at O(vocabulary).
 This module is the live leg: readStream over an arriving-documents
 directory, and foreachBatch merges each micro-batch's stats into a
-versioned snapshot — the same versioned-fold shape as
-streaming/compaction.py. Because the merge is additive (NOT last-write-
-wins), exactly-once needs more than the checkpointLocation: each
-snapshot records the batch_id that produced it, and replayed batches
-are detected and skipped (see fold()).
+versioned snapshot through the shared replay-safe fold
+(streaming/fold.py). The merge is additive (NOT last-write-wins), so
+the fold's batch_id replay skip is what keeps it exactly-once.
 
-After (or during) ingest, bm25_search(stats=read_latest_stats(...))
+After (or during) ingest, bm25_search(stats=fold.read_latest(...))
 serves queries with ONE corpus scan and a tiny stats read — the
 index-maintenance story a lexical engine needs at 100 TB: stats stay
 current without ever rescanning the corpus.
@@ -18,55 +16,18 @@ current without ever rescanning the corpus.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from distributed_vector_database_spark.operators.lexical import (
     merge_term_stats,
     term_stats,
 )
-from distributed_vector_database_spark.streaming.compaction import latest_version
+from distributed_vector_database_spark.streaming.fold import (
+    build_fold as versioned_fold,
+    run_stream,
+)
 
 DOCS_SCHEMA = "doc_id long, text string"
-
-# Unlike compaction's apply_changelog (last-write-wins, safe to re-apply),
-# merge_term_stats is ADDITIVE: folding the same micro-batch twice
-# double-counts tf/df/n_docs/total_tokens. foreachBatch is at-least-once
-# across failures — if the job dies after writing v+1 but before the
-# streaming checkpoint commits, the restarted batch re-runs with the same
-# batch_id. Each snapshot therefore records the batch_id that produced it
-# in an `_applied_batch_id` marker (underscore-prefixed files are ignored
-# by Spark's parquet reader, like _SUCCESS), and fold() skips the merge
-# when the newest snapshot already carries the incoming batch_id.
-_MARKER = "_applied_batch_id"
-
-
-def _applied_batch(stats_dir: str, v: int) -> int | None:
-    """batch_id recorded in snapshot v's marker, or None if the marker is
-    absent (an interrupted write: parquet files may exist, marker does
-    not — the version is incomplete and must not be used as a base)."""
-    try:
-        with open(os.path.join(stats_dir, f"v={v}", _MARKER)) as f:
-            return int(f.read().strip())
-    except (FileNotFoundError, ValueError):
-        return None
-
-
-def _write_marker(stats_dir: str, v: int, batch_id: int) -> None:
-    with open(os.path.join(stats_dir, f"v={v}", _MARKER), "w") as f:
-        f.write(str(batch_id))
-
-
-def read_latest_stats(spark: SparkSession, stats_dir: str) -> DataFrame:
-    """Newest COMPLETE maintained term-stats snapshot (skips a trailing
-    version whose write was interrupted before its marker landed)."""
-    v = latest_version(stats_dir)
-    if v >= 0 and _applied_batch(stats_dir, v) is None:
-        v -= 1
-    if v < 0:
-        raise FileNotFoundError(f"no stats versions under {stats_dir}")
-    return spark.read.parquet(f"{stats_dir}/v={v}")
 
 
 def build_fold(stats_dir: str, text_col: str = "text"):
@@ -74,32 +35,11 @@ def build_fold(stats_dir: str, text_col: str = "text"):
     new versioned snapshot, replay-safe under at-least-once delivery.
     Exposed so tests can drive crash/replay sequences directly."""
 
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark_ = batch.sparkSession
-        v = latest_version(stats_dir)
-        if v >= 0:
-            applied = _applied_batch(stats_dir, v)
-            if applied == batch_id:
-                # at-least-once replay: this batch already landed (crash
-                # fell between marker write and checkpoint commit).
-                # Merging again would double-count — skip.
-                return
-            if applied is None:
-                # interrupted write of THIS batch's snapshot (parquet
-                # partially written, marker never landed): rebuild it
-                # from the last complete version; mode=overwrite clears
-                # the leftovers.
-                v -= 1
+    def step(batch, base, batch_id):
         fresh = term_stats(batch, text_col=text_col)
-        if v >= 0:
-            base = spark_.read.parquet(f"{stats_dir}/v={v}")
-            fresh = merge_term_stats(base, fresh)
-        fresh.write.mode("overwrite").parquet(f"{stats_dir}/v={v + 1}")
-        _write_marker(stats_dir, v + 1, batch_id)
+        return {"": fresh if base is None else merge_term_stats(base(), fresh)}
 
-    return fold
+    return versioned_fold(stats_dir, step)
 
 
 def run_term_stats_stream(
@@ -112,18 +52,8 @@ def run_term_stats_stream(
     max_files_per_trigger: int | None = None,
 ):
     """Continuously fold arriving documents' term statistics into a
-    versioned stats snapshot. Returns the StreamingQuery.
-
-    `max_files_per_trigger` bounds micro-batch size (and lets tests force
-    the multi-batch merge path); default lets availableNow drain freely."""
+    versioned stats snapshot. Returns the StreamingQuery."""
     fold = build_fold(stats_dir, text_col=text_col)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.json(docs_dir)
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_stream(
+        spark, docs_dir, schema, fold, checkpoint_dir, max_files_per_trigger
     )

@@ -3,10 +3,9 @@
 A 100 TB event store cannot re-scan history to answer "events per
 hour by type"; it maintains the answer. The rollup table
 (window_start, key..., n, sum_value) is ADDITIVE and mergeable, so
-maintenance is the same replay-safe versioned fold as the BM25
-term-stats and span-gram states (streaming/lexical_stats.py — the
-batch_id marker makes at-least-once foreachBatch exactly-once);
-serving reads the tiny newest snapshot instead of the event history.
+maintenance is the shared replay-safe versioned fold
+(streaming/fold.py); serving reads the tiny newest snapshot instead
+of the event history.
 
 Folding N micro-batches then reading the snapshot is hash-equal to
 one aggregation over all events — pinned by the `events_rollup_served`
@@ -17,11 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from distributed_vector_database_spark.streaming.compaction import latest_version
-from distributed_vector_database_spark.streaming.lexical_stats import (
-    _applied_batch,
-    _write_marker,
-)
+from distributed_vector_database_spark.streaming.fold import build_fold, run_stream
 
 EVENTS_SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double"
 
@@ -56,15 +51,6 @@ def merge_rollup(base: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def read_latest_rollup(spark: SparkSession, rollup_dir: str) -> DataFrame:
-    v = latest_version(rollup_dir)
-    if v >= 0 and _applied_batch(rollup_dir, v) is None:
-        v -= 1
-    if v < 0:
-        raise FileNotFoundError(f"no rollup versions under {rollup_dir}")
-    return spark.read.parquet(f"{rollup_dir}/v={v}")
-
-
 def build_rollup_fold(
     rollup_dir: str,
     granularity: str = "hour",
@@ -72,28 +58,13 @@ def build_rollup_fold(
     keys: list[str] | None = None,
 ):
     """foreachBatch body: fold one micro-batch's rollup into a new
-    version, skipping at-least-once replays via the batch_id marker."""
+    version (streaming/fold.py)."""
 
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark_ = batch.sparkSession
-        v = latest_version(rollup_dir)
-        if v >= 0:
-            applied = _applied_batch(rollup_dir, v)
-            if applied == batch_id:
-                return
-            if applied is None:
-                v -= 1
+    def step(batch, base, batch_id):
         fresh = window_rollup(batch, granularity, ts_col, keys)
-        if v >= 0:
-            fresh = merge_rollup(
-                spark_.read.parquet(f"{rollup_dir}/v={v}"), fresh
-            )
-        fresh.write.mode("overwrite").parquet(f"{rollup_dir}/v={v + 1}")
-        _write_marker(rollup_dir, v + 1, batch_id)
+        return {"": fresh if base is None else merge_rollup(base(), fresh)}
 
-    return fold
+    return build_fold(rollup_dir, step)
 
 
 def run_rollup_stream(
@@ -109,13 +80,6 @@ def run_rollup_stream(
     """Continuously maintain the rollup over arriving JSON events.
     Returns the StreamingQuery."""
     fold = build_rollup_fold(rollup_dir, granularity, keys=keys)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.json(events_dir)
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_stream(
+        spark, events_dir, schema, fold, checkpoint_dir, max_files_per_trigger
     )

@@ -4,13 +4,11 @@ Each arriving micro-batch of documents is cleaned against the
 accumulated gram state (operators/dedup.py::
 remove_duplicate_spans_incremental: corpus never re-windowed), the
 cleaned batch lands under out_dir/batch=<id>/, and the batch's own
-gram counts fold into a versioned state snapshot — the same
-replay-safe additive-fold shape as streaming/lexical_stats.py: the
-gram merge is additive, so at-least-once foreachBatch replay would
-double-count; each state version records its batch_id in an
-`_applied_batch_id` marker and a replayed batch is skipped whole
-(its cleaned output was already written with overwrite semantics, so
-re-skipping is idempotent end-to-end).
+gram counts fold into a versioned state snapshot through the shared
+replay-safe fold (streaming/fold.py). The gram merge is additive, so
+a replayed batch is skipped whole (its cleaned output was already
+written with overwrite semantics, so skipping is idempotent
+end-to-end).
 
 At 100 TB/day the state is the full gram multiset (16-byte md5 + a
 count — proportional to token mass, the irreducible cost of EXACT
@@ -22,30 +20,14 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from distributed_vector_database_spark.operators.dedup import (
     remove_duplicate_spans_incremental,
-    span_gram_state,
 )
-from distributed_vector_database_spark.streaming.compaction import latest_version
-from distributed_vector_database_spark.streaming.lexical_stats import (
-    _applied_batch,
-    _write_marker,
-)
+from distributed_vector_database_spark.streaming.fold import build_fold, run_stream
 
 DOCS_SCHEMA = "doc_id long, text string"
-
-
-def read_latest_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Newest COMPLETE gram-state snapshot (a trailing marker-less
-    version is an interrupted write and is skipped)."""
-    v = latest_version(state_dir)
-    if v >= 0 and _applied_batch(state_dir, v) is None:
-        v -= 1
-    if v < 0:
-        raise FileNotFoundError(f"no state versions under {state_dir}")
-    return spark.read.parquet(f"{state_dir}/v={v}")
 
 
 def build_span_fold(state_dir: str, out_dir: str, k: int = 8):
@@ -53,42 +35,28 @@ def build_span_fold(state_dir: str, out_dir: str, k: int = 8):
     write the cleaned rows, fold the batch's grams into a new state
     version. Exposed directly so tests can drive crash/replay."""
 
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark_ = batch.sparkSession
-        v = latest_version(state_dir)
-        if v >= 0:
-            applied = _applied_batch(state_dir, v)
-            if applied == batch_id:
-                return  # full replay: output + state already landed
-            if applied is None:
-                v -= 1  # interrupted write: rebuild on the last good base
-        if v >= 0:
-            state = spark_.read.parquet(f"{state_dir}/v={v}")
-            cleaned, delta = remove_duplicate_spans_incremental(
-                batch, state, k=k, materialize_windows=True
-            )
-            merged = (
-                state.unionByName(delta)
-                .groupBy("gram")
-                .agg({"n": "sum"})
-                .withColumnRenamed("sum(n)", "n")
-            )
-        else:
+    def step(batch, base, batch_id):
+        if base is None:
             # first batch: only within-batch duplicates exist
-            empty = spark_.createDataFrame([], "gram string, n long")
-            cleaned, delta = remove_duplicate_spans_incremental(
-                batch, empty, k=k, materialize_windows=True
-            )
-            merged = delta
+            state = batch.sparkSession.createDataFrame([], "gram string, n long")
+        else:
+            state = base()
+        cleaned, delta = remove_duplicate_spans_incremental(
+            batch, state, k=k, materialize_windows=True
+        )
         cleaned.write.mode("overwrite").parquet(
             os.path.join(out_dir, f"batch={batch_id}")
         )
-        merged.write.mode("overwrite").parquet(f"{state_dir}/v={v + 1}")
-        _write_marker(state_dir, v + 1, batch_id)
+        if base is None:
+            return {"": delta}
+        return {
+            "": state.unionByName(delta)
+            .groupBy("gram")
+            .agg({"n": "sum"})
+            .withColumnRenamed("sum(n)", "n")
+        }
 
-    return fold
+    return build_fold(state_dir, step)
 
 
 def run_span_dedup_stream(
@@ -104,13 +72,6 @@ def run_span_dedup_stream(
     """Continuously span-dedup arriving JSON documents against the
     growing gram state. Returns the StreamingQuery."""
     fold = build_span_fold(state_dir, out_dir, k=k)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.json(docs_dir)
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_stream(
+        spark, docs_dir, schema, fold, checkpoint_dir, max_files_per_trigger
     )

@@ -20,30 +20,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from distributed_vector_database_spark.operators.knn import knn_join
+from distributed_vector_database_spark.streaming.fold import start_stream
 
 
 def stream_knn(
     query_stream: DataFrame,
     corpus: DataFrame,
     k: int = 5,
-    checkpoint_dir: str | None = None,
-    sink=None,
-    trigger_available_now: bool = True,
+    *,
+    sink,
+    checkpoint_dir: str,
 ):
     """Answer a streaming DataFrame of (query_id, query_vec) against
     `corpus`. Each micro-batch runs the batch knn_join kernel and hands
-    (batch_df, batch_id) to `sink` (a foreachBatch callable). Returns
+    (result_df, batch_id) to `sink` (a foreachBatch callable). Returns
     the StreamingQuery."""
 
     def answer(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        result = knn_join(batch, corpus, k=k)
-        sink(result, batch_id)
+        sink(knn_join(batch, corpus, k=k), batch_id)
 
-    writer = query_stream.writeStream.foreachBatch(answer)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(query_stream, answer, checkpoint_dir)

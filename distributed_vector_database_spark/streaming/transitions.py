@@ -15,10 +15,9 @@ the natural property of an append-only event log split on time. The
 fold is then hash-equal to the one-shot event_transitions over the
 union, pinned by tests/test_transitions_stream.py.
 
-Replay safety: the same write-audit-publish versioned fold as the
-BM25 term stats / rollup states (streaming/lexical_stats.py) — the
-batch_id marker makes at-least-once foreachBatch delivery
-exactly-once.
+Replay safety: the shared versioned fold (streaming/fold.py); the
+ledger is a sidecar written at the same version before `counts`,
+which carries the marker.
 """
 
 from __future__ import annotations
@@ -27,10 +26,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from distributed_vector_database_spark.streaming.compaction import latest_version
-from distributed_vector_database_spark.streaming.lexical_stats import (
-    _applied_batch,
-    _write_marker,
+from distributed_vector_database_spark.streaming.fold import (
+    build_fold,
+    read_latest,
+    run_stream,
 )
 
 EVENTS_SCHEMA = (
@@ -80,45 +79,23 @@ def merge_transitions(base: DataFrame, delta: DataFrame) -> DataFrame:
 
 def build_transitions_fold(state_dir: str):
     """foreachBatch body: fold one micro-batch into a new version of
-    {state_dir}/counts/v=N and {state_dir}/ledger/v=N, skipping
-    at-least-once replays via the batch_id marker."""
+    {state_dir}/counts/v=N and {state_dir}/ledger/v=N
+    (streaming/fold.py)."""
 
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark_ = batch.sparkSession
-        cdir, ldir = f"{state_dir}/counts", f"{state_dir}/ledger"
-        v = latest_version(cdir)
-        if v >= 0:
-            applied = _applied_batch(cdir, v)
-            if applied == batch_id:
-                return
-            if applied is None:
-                v -= 1
-        ledger = spark_.read.parquet(f"{ldir}/v={v}") if v >= 0 else None
+    def step(batch, base, batch_id):
+        ledger = None if base is None else base("ledger")
         counts, new_ledger = _batch_steps(batch, ledger)
-        if v >= 0:
-            counts = merge_transitions(
-                spark_.read.parquet(f"{cdir}/v={v}"), counts
-            )
-        # materialize the ledger BEFORE overwriting anything it reads
-        new_ledger.write.mode("overwrite").parquet(f"{ldir}/v={v + 1}")
-        counts.write.mode("overwrite").parquet(f"{cdir}/v={v + 1}")
-        _write_marker(cdir, v + 1, batch_id)
+        if base is not None:
+            counts = merge_transitions(base("counts"), counts)
+        return {"ledger": new_ledger, "counts": counts}
 
-    return fold
+    return build_fold(state_dir, step, marker_table="counts")
 
 
 def read_transition_matrix(spark: SparkSession, state_dir: str) -> DataFrame:
     """Serve (prev_type, next_type, transitions, prob) from the newest
     fully-published snapshot — probabilities derived at read time."""
-    cdir = f"{state_dir}/counts"
-    v = latest_version(cdir)
-    if v >= 0 and _applied_batch(cdir, v) is None:
-        v -= 1
-    if v < 0:
-        raise FileNotFoundError(f"no transition state under {state_dir}")
-    counts = spark.read.parquet(f"{cdir}/v={v}")
+    counts = read_latest(spark, state_dir, "counts")
     row_tot = Window.partitionBy("prev_type")
     return counts.select(
         "prev_type",
@@ -141,13 +118,6 @@ def run_transitions_stream(
     """Continuously maintain the transition matrix over arriving JSON
     events. Returns the StreamingQuery."""
     fold = build_transitions_fold(state_dir)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.json(events_dir)
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_stream(
+        spark, events_dir, schema, fold, checkpoint_dir, max_files_per_trigger
     )

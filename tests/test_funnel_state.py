@@ -38,13 +38,10 @@ def _batches(spark):
 
 
 def _state_rows(spark, path):
-    from distributed_vector_database_spark.streaming.funnel_state import (
-        read_latest_funnel_state,
-    )
+    from distributed_vector_database_spark.streaming.fold import read_latest
 
     return sorted(
-        (r["user"], r["s"], r["lt"])
-        for r in read_latest_funnel_state(spark, path).collect()
+        (r["user"], r["s"], r["lt"]) for r in read_latest(spark, path).collect()
     )
 
 
@@ -106,6 +103,7 @@ def test_fold_recovers_from_crash_between_write_and_marker(
     # kill the fold after the state parquet lands but BEFORE the
     # batch_id marker: the replayed batch must rebuild on the last
     # GOOD base and end bit-identical to the clean two-fold run
+    from distributed_vector_database_spark.streaming import fold as vf
     from distributed_vector_database_spark.streaming import funnel_state as fs
 
     _, b1, b2 = _batches(spark)
@@ -119,12 +117,12 @@ def test_fold_recovers_from_crash_between_write_and_marker(
     fold(b1, 0)
     after_b1 = _state_rows(spark, crashy)
 
-    real_marker = fs._write_marker
+    real_marker = vf.write_marker
 
     def boom(*a, **k):
         raise RuntimeError("simulated crash before marker")
 
-    monkeypatch.setattr(fs, "_write_marker", boom)
+    monkeypatch.setattr(vf, "write_marker", boom)
     try:
         fold(b2, 1)
     except RuntimeError:
@@ -133,7 +131,7 @@ def test_fold_recovers_from_crash_between_write_and_marker(
     # the last published version (the b1 state)
     assert _state_rows(spark, crashy) == after_b1
 
-    monkeypatch.setattr(fs, "_write_marker", real_marker)
+    monkeypatch.setattr(vf, "write_marker", real_marker)
     fold(b2, 1)  # stream replay after restart
     assert _state_rows(spark, crashy) == _state_rows(spark, clean)
 

@@ -259,8 +259,11 @@ def test_streaming_term_stats_maintenance(spark, tmp_path):
     served from the maintained snapshot must equal the inline path."""
     import json
 
+    from distributed_vector_database_spark.streaming.fold import (
+        latest_version,
+        read_latest,
+    )
     from distributed_vector_database_spark.streaming.lexical_stats import (
-        read_latest_stats,
         run_term_stats_stream,
     )
 
@@ -283,12 +286,8 @@ def test_streaming_term_stats_maintenance(spark, tmp_path):
     )
     q.awaitTermination(120)
 
-    maintained = read_latest_stats(spark, str(tmp_path / "stats"))
+    maintained = read_latest(spark, str(tmp_path / "stats"))
     # both micro-batches folded: v=0 (fresh) then v=1 (merged)
-    from distributed_vector_database_spark.streaming.compaction import (
-        latest_version,
-    )
-
     assert latest_version(str(tmp_path / "stats")) == 1
     dall = spark.createDataFrame(list(CORPUS.items()), ["doc_id", "text"])
 
@@ -505,6 +504,7 @@ def test_streaming_term_stats_replay_is_idempotent(spark, tmp_path):
     that version from the last complete one."""
     import os
 
+    from distributed_vector_database_spark.streaming import fold as vf
     from distributed_vector_database_spark.streaming import lexical_stats as ls
 
     stats_dir = str(tmp_path / "stats")
@@ -526,32 +526,32 @@ def test_streaming_term_stats_replay_is_idempotent(spark, tmp_path):
         }
 
     fold(d1, 0)
-    after_b0 = snap(ls.read_latest_stats(spark, stats_dir))
+    after_b0 = snap(vf.read_latest(spark, stats_dir))
     # crash-replay of batch 0: snapshot + marker exist, checkpoint didn't
     # commit -> re-delivered with the same batch_id -> must be a no-op
     fold(d1, 0)
-    assert ls.latest_version(stats_dir) == 0
-    assert snap(ls.read_latest_stats(spark, stats_dir)) == after_b0
+    assert vf.latest_version(stats_dir) == 0
+    assert snap(vf.read_latest(spark, stats_dir)) == after_b0
 
     fold(d2, 1)
     dall = spark.createDataFrame(list(CORPUS.items()), ["doc_id", "text"])
     want = snap(term_stats(dall))
-    assert snap(ls.read_latest_stats(spark, stats_dir)) == want
+    assert snap(vf.read_latest(spark, stats_dir)) == want
 
     # interrupted write: v=2 parquet exists but marker never landed ->
-    # read_latest_stats must serve v=1; replaying batch 2 rebuilds v=2
+    # read_latest must serve v=1; replaying batch 2 rebuilds v=2
     snapshot_v1 = snap(spark.read.parquet(f"{stats_dir}/v=1"))
     spark.createDataFrame([("garbage", 1, 1, 9, 9)],
                           ["term", "tf", "df", "n_docs", "total_tokens"]
                           ).write.mode("overwrite").parquet(f"{stats_dir}/v=2")
-    assert snap(ls.read_latest_stats(spark, stats_dir)) == snapshot_v1
+    assert snap(vf.read_latest(spark, stats_dir)) == snapshot_v1
     fold(d2, 2)  # replayed delivery after the crash
-    assert ls.latest_version(stats_dir) == 2
-    got = snap(ls.read_latest_stats(spark, stats_dir))
+    assert vf.latest_version(stats_dir) == 2
+    got = snap(vf.read_latest(spark, stats_dir))
     # v=2 = v=1 + d2 again; relative to `want` every d2 term is counted
     # once more -- just assert the rebuild used v=1 as base, not garbage
     assert "garbage" not in got
-    assert ls._applied_batch(stats_dir, 2) == 2
+    assert vf.applied_batch(stats_dir, 2) == 2
 
 
 def test_hybrid_linear_math(spark):

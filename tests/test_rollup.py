@@ -7,9 +7,9 @@ import os
 
 from pyspark.sql import functions as F
 
+from distributed_vector_database_spark.streaming.fold import read_latest
 from distributed_vector_database_spark.streaming.rollup import (
     build_rollup_fold,
-    read_latest_rollup,
     run_rollup_stream,
     window_rollup,
 )
@@ -47,11 +47,11 @@ def test_fold_equals_oneshot_and_replay_safe(spark, tmp_path):
     fold(ev.filter("event_id % 3 = 0"), 0)
     fold(ev.filter("event_id % 3 = 1"), 1)
     fold(ev.filter("event_id % 3 = 2"), 2)
-    got = _snap(read_latest_rollup(spark, d))
+    got = _snap(read_latest(spark, d))
     assert got == _snap(window_rollup(ev))
     # replaying the last batch must change nothing
     fold(ev.filter("event_id % 3 = 2"), 2)
-    assert _snap(read_latest_rollup(spark, d)) == got
+    assert _snap(read_latest(spark, d)) == got
 
 
 def test_live_rollup_stream(spark, tmp_path):
@@ -82,6 +82,6 @@ def test_live_rollup_stream(spark, tmp_path):
         max_files_per_trigger=1,
     )
     q.awaitTermination(120)
-    assert _snap(read_latest_rollup(spark, str(tmp_path / "roll"))) == _snap(
+    assert _snap(read_latest(spark, str(tmp_path / "roll"))) == _snap(
         window_rollup(ev)
     )

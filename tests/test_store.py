@@ -153,9 +153,7 @@ def test_auto_compaction_bounds_log_files(spark, tmp_path):
     single-record Spark jobs, so CI drives 100 puts at threshold 16.)"""
     import glob
 
-    from distributed_vector_database_spark.streaming.compaction import (
-        latest_version,
-    )
+    from distributed_vector_database_spark.streaming.fold import latest_version
 
     root = str(tmp_path / "auto")
     s = VectorStore(spark, root, dim=DIM, auto_compact_files=16)
@@ -192,9 +190,7 @@ def test_auto_compaction_disabled_with_zero(spark, tmp_path):
         s.put(f"k{i}", [float(i)] * DIM)
     import glob
 
-    from distributed_vector_database_spark.streaming.compaction import (
-        latest_version,
-    )
+    from distributed_vector_database_spark.streaming.fold import latest_version
 
     assert len(glob.glob(f"{root}/changelog/*.parquet")) == 5
     assert latest_version(f"{root}/snapshot") < 0

@@ -3,6 +3,8 @@ batch kernel; results match batch knn_join exactly."""
 
 import json
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from distributed_vector_database_spark.operators.knn import knn_join
@@ -42,3 +44,14 @@ def test_stream_knn_matches_batch(spark, tables, tmp_path):
     )
     want = sorted(tuple(r) for r in knn_join(batch_queries, emb, k=3).collect())
     assert sorted(collected) == want and len(want) == 6
+
+
+def test_stream_knn_requires_sink_and_checkpoint(spark, tmp_path):
+    # without a sink the stream used to start and then fail its first
+    # non-empty batch with "'NoneType' object is not callable"
+    stream = spark.readStream.schema(
+        "query_id long, query_vec array<double>"
+    ).json(str(tmp_path))
+    corpus = spark.createDataFrame([(1, [0.0, 1.0])], "vec_id long, embedding array<double>")
+    with pytest.raises(TypeError):
+        stream_knn(stream, corpus, k=3)

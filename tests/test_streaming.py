@@ -5,9 +5,10 @@ import json
 
 from distributed_vector_database_spark.operators.changelog import compact
 from distributed_vector_database_spark.streaming.compaction import (
-    read_latest_snapshot,
+    build_compaction_fold,
     run_compaction_stream,
 )
+from distributed_vector_database_spark.streaming.fold import read_latest
 from distributed_vector_database_spark.streaming.windows import (
     session_windows,
     sliding_user_activity,
@@ -62,7 +63,7 @@ def test_streaming_compaction_matches_batch(spark, tmp_path):
 
     got = {
         r["key"]: r["value"]
-        for r in read_latest_snapshot(spark, str(tmp_path / "snap")).collect()
+        for r in read_latest(spark, str(tmp_path / "snap")).collect()
     }
     # batch oracle: full-log compaction
     batch = spark.createDataFrame(
@@ -71,3 +72,24 @@ def test_streaming_compaction_matches_batch(spark, tmp_path):
     )
     want = {r["key"]: r["value"] for r in compact(batch, seq_col="seq").collect()}
     assert got == want == {"a": 3.0, "c": 9.0}
+
+
+def test_compaction_snapshot_without_marker_is_not_served(spark, tmp_path):
+    # a complete parquet v=1 whose marker never landed (the fold died
+    # between the snapshot write and the marker) must stay invisible:
+    # the reader serves v=0, and the replayed batch rebuilds v=1 on it
+    snap = str(tmp_path / "snap")
+    cl = "op string, key string, value double, ts long, seq long"
+    fold = build_compaction_fold(snap)
+    fold(spark.createDataFrame([("PUT", "a", 1.0, 10, 1)], cl), 0)
+    spark.createDataFrame(
+        [("a", 7.0, 11, 2), ("z", 9.0, 11, 3)],
+        "key string, value double, ts long, seq long",
+    ).write.mode("overwrite").parquet(f"{snap}/v=1")
+
+    def served():
+        return {r["key"]: r["value"] for r in read_latest(spark, snap).collect()}
+
+    assert served() == {"a": 1.0}
+    fold(spark.createDataFrame([("PUT", "b", 2.0, 12, 4)], cl), 1)
+    assert served() == {"a": 1.0, "b": 2.0}
